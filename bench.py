@@ -508,7 +508,6 @@ def main() -> None:
             cfg_overrides=dict(
                 bloom_min_seen=0,
                 bloom_broadcast_max_bytes=0,
-                delta_claim=True,
                 table_max_records_per_file=20_000,
                 compact_every=3,
                 vacuum_keep_versions=2,

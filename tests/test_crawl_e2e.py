@@ -30,7 +30,8 @@ def _run(spark, tmp, smoke_dfs, smoke_fixture, smoke_cfg, use_bloom: bool):
 
 @pytest.mark.parametrize("use_bloom", [True, False], ids=["bloom", "exact-only"])
 def test_engine_matches_simulator(
-    spark, tmp_path, smoke_dfs, smoke_fixture, smoke_cfg, smoke_sim, use_bloom
+    spark, tmp_path, smoke_dfs, smoke_fixture, smoke_cfg, smoke_sim, use_bloom,
+    assert_end_state,
 ):
     drv = _run(spark, tmp_path / f"run-{use_bloom}", smoke_dfs, smoke_fixture, smoke_cfg, use_bloom)
 
@@ -56,61 +57,32 @@ def test_engine_matches_simulator(
     )
     assert eng == gold
 
-
-def test_delta_claim_equals_overwrite_claim(
-    spark, tmp_path, smoke_dfs, smoke_fixture, smoke_cfg
-):
-    """The delta-cost claim (delete scheduled keys + append additions;
-    VERDICT r3 next #1/#4) must produce bit-identical crawl state to the
-    legacy full-overwrite claim: same schedule, seen, pages, and FINAL
-    FRONTIER/HOST_STATE multisets."""
-    import dataclasses
-
-    runs = {}
-    for mode in (True, False):
-        cfg = dataclasses.replace(smoke_cfg, delta_claim=mode, max_rounds=4)
-        drv = _run(
-            spark, tmp_path / f"dc-{mode}", smoke_dfs, smoke_fixture, cfg, use_bloom=False
-        )
-        runs[mode] = {
-            "schedule": sorted(
-                map(tuple, drv.read("schedule").orderBy("round", "rank").collect())
-            ),
-            "seen": sorted(map(tuple, drv.read("seen").collect())),
-            "pages": sorted(
-                map(tuple, drv.read("pages").select("url", "round", "caption").collect())
-            ),
-            "frontier": sorted(map(tuple, drv.read("frontier").collect())),
-            "host_state": sorted(map(tuple, drv.read("host_state").collect())),
-        }
-    assert runs[True] == runs[False]
+    # final frontier and host_state (the delta claim's end state)
+    assert_end_state(drv, smoke_sim)
 
 
-def test_delta_claim_keeps_unscheduled_round0_seeds(
-    spark, tmp_path, smoke_dfs, smoke_fixture, smoke_cfg
+def test_unscheduled_round0_seeds_carry_over(
+    spark, tmp_path, smoke_dfs, smoke_fixture, smoke_cfg, assert_end_state
 ):
     """Regression (code-review r4 finding #1, reproduced): with
     round_limit below the seed count, the fresh-start seed frontier
     exists only in memory, and the delta claim silently dropped every
     seed not scheduled in round 0 — one-shot seeds were lost forever.
-    Both claim paths must match the simulator exactly under a tiny
-    round_limit."""
+    The schedule and the final frontier/host_state must match the
+    simulator exactly under a tiny round_limit."""
     import dataclasses
 
     from tor_spider_spark.simulator import simulate
 
-    cfg0 = dataclasses.replace(smoke_cfg, round_limit=2, max_rounds=4)
-    sim = simulate(smoke_fixture, cfg0)
-    for mode in (True, False):
-        cfg = dataclasses.replace(cfg0, delta_claim=mode)
-        drv = _run(
-            spark, tmp_path / f"rl2-{mode}", smoke_dfs, smoke_fixture, cfg, use_bloom=False
-        )
-        sched: dict[int, list[str]] = {}
-        for r in drv.read("schedule").orderBy("round", "rank").collect():
-            sched.setdefault(r["round"], []).append(r["url"])
-        for i in range(4):
-            assert sched.get(i, []) == sim.schedule[i], f"delta={mode} round {i}"
+    cfg = dataclasses.replace(smoke_cfg, round_limit=2, max_rounds=4)
+    sim = simulate(smoke_fixture, cfg)
+    drv = _run(spark, tmp_path / "rl2", smoke_dfs, smoke_fixture, cfg, use_bloom=False)
+    sched: dict[int, list[str]] = {}
+    for r in drv.read("schedule").orderBy("round", "rank").collect():
+        sched.setdefault(r["round"], []).append(r["url"])
+    for i in range(4):
+        assert sched.get(i, []) == sim.schedule[i], f"round {i}"
+    assert_end_state(drv, sim)
 
 
 def test_file_chunking_knob_is_semantics_free(

@@ -5,7 +5,7 @@ exercises for 32 rounds:
 
 - bloom probe engaged every round (bloom_min_seen=0) AND forced onto the
   partition-aligned path (broadcast cap 0 — the multi-JVM/10^10 route);
-- delta-cost claim on (delete+append with carried files);
+- delta-cost claim (delete+append with carried files);
 - chunked files (table_max_records_per_file) so pruning has real ranges;
 - compaction + vacuum rotation mid-crawl (compaction rewrites the range
   layout the delta claim prunes on; vacuum must never free a carried
@@ -34,7 +34,6 @@ SOAK_CFG = CrawlConfig(
     default_host_budget=2,
     bloom_min_seen=0,  # probe every round, even at toy seen sizes
     bloom_broadcast_max_bytes=0,  # force the partition-aligned probe
-    delta_claim=True,
     table_max_records_per_file=4,  # aggressive chunking at toy scale
     compact_every=4,
     vacuum_keep_versions=2,
@@ -143,7 +142,6 @@ def test_design_point_cfg_is_scale_shaped():
     """Pin the soak's knob shape so a refactor can't silently turn off a
     mechanism (e.g. a renamed knob defaulting the probe back to
     broadcast)."""
-    assert SOAK_CFG.delta_claim
     assert SOAK_CFG.bloom_min_seen == 0
     assert SOAK_CFG.bloom_knobs()["broadcast_max_bytes"] == 0
     assert SOAK_CFG.phash_dedup_dist is not None

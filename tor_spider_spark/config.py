@@ -28,6 +28,9 @@ DEFAULT_MAX_DEPTH = 9  # SPIDER_DEPTH=3 layers/job × every-3rd-layer frontier (
 DEFAULT_SEED_TRAVERSAL_DEPTH = 3
 DEFAULT_ROUND_LIMIT = 2048  # MINIMUM_JOBS=64 batch × 32 workers, scaled to batch rounds
 DEFAULT_N_BUCKETS = 16  # bucket(B, host_hash) partitioning; B=4096 at 10^10-URL scale
+# bloom shard sizing (SURVEY §4.4): bits/key ≈ 10 → fpp ≈ 1%
+BLOOM_BITS_PER_KEY = 10
+BLOOM_NUM_HASHES = 7
 
 # Child priority: deterministic, depth-decaying (reference has no priority
 # column — SURVEY §1.1; the north rule adds a priority queue, so the rule
@@ -46,11 +49,8 @@ class CrawlConfig:
     round_limit: int = DEFAULT_ROUND_LIMIT
     n_buckets: int = DEFAULT_N_BUCKETS
     max_rounds: int = 10
-    # bloom shard sizing (SURVEY §4.4): bits/key ≈ 10 → fpp ≈ 1%
-    bloom_bits_per_key: int = 10
-    bloom_num_hashes: int = 7
     # expected TOTAL seen URLs the bloom must hold; shards are sized to
-    # bits_per_key × capacity / n_buckets (next power of two, ≥ 2^20) —
+    # BLOOM_BITS_PER_KEY × capacity / n_buckets (next power of two, ≥ 2^20) —
     # an undersized bloom saturates and silently degrades every probe to
     # "maybe" (correct but useless). None = the legacy 2^20 bits/shard
     # (~1.6M capacity at 16 buckets). At the 10^10 design point:
@@ -94,13 +94,6 @@ class CrawlConfig:
     # The probe additionally dispatches on executor TOPOLOGY at call time
     # — see operators/bloom.py:BloomShards.probe (r5).
     bloom_broadcast_max_bytes: int | None = None
-    # delta-cost claim (VERDICT r3 next #1/#4): commit each round as
-    # "delete the claimed keys + append the discovered rows" —
-    # SnapshotTable rewrites only footer-pruned files, IcebergTable
-    # issues merge-on-read DELETE/MERGE — instead of rewriting the whole
-    # frontier/host_state per round (O(table) write I/O at the 10^10-URL
-    # design point). False restores the full-overwrite path (A/B lever).
-    delta_claim: bool = True
     # splits each sorted bucket partition of frontier/host_state commits
     # into consecutive chunks so claim-key file pruning has narrow
     # per-file ranges to work with; 0 = one file per bucket (fixture
@@ -144,7 +137,7 @@ class CrawlConfig:
         | knob                | derivation                          | measured anchor (BENCH/BASELINE.md) |
         |---------------------|-------------------------------------|-------------------------------------|
         | n_shards            | = n_buckets (shard ≡ table bucket)  | co-located probe, no extra shuffle  |
-        | m_bits/shard        | next pow2 ≥ bits_per_key·capacity/n_shards, ≥ 2^20 | undersized bloom saturates → all-"maybe" (r2) |
+        | m_bits/shard        | next pow2 ≥ BLOOM_BITS_PER_KEY·capacity/n_shards, ≥ 2^20 | undersized bloom saturates → all-"maybe" (r2) |
         | bloom_min_seen      | exact-vs-probe crossover            | r6: NO local crossover ≤80M under per-round timing (BENCH/bloom_crossover_r06.json) ⇒ default 10^9; network clusters measure their own crossover and override |
         | broadcast_max_bytes | cap on collect+broadcast bitsets    | 512 MB single-process; probe() ÷ executor topology at call time (r5: broadcast probe HALVED at 4 real JVMs — BENCH/bloom_lc_ab.json) |
 
@@ -152,7 +145,7 @@ class CrawlConfig:
         m_bits = 2^25 (4 MB/shard, 16 GB total) ⇒ every topology routes to
         the partition-aligned probe — which is the deployment path."""
         if self.bloom_capacity:
-            total_bits = self.bloom_bits_per_key * self.bloom_capacity
+            total_bits = BLOOM_BITS_PER_KEY * self.bloom_capacity
             # next pow2 >= x is 1 << (x-1).bit_length(); the x.bit_length()
             # form silently DOUBLES the bitset when x is itself a power of
             # two (code-review r5 #3)
@@ -163,7 +156,7 @@ class CrawlConfig:
         knobs = {
             "n_shards": self.n_buckets,
             "m_bits": m_bits,
-            "k": self.bloom_num_hashes,
+            "k": BLOOM_NUM_HASHES,
         }
         if self.bloom_broadcast_max_bytes is not None:
             knobs["broadcast_max_bytes"] = self.bloom_broadcast_max_bytes

@@ -222,14 +222,9 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     return _jaccard_verify(cand, arrays, threshold).distinct()
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """64-permutation MinHash over word-trigram shingles, computed in a
-    single groupBy pass (64 min-aggregates over one shuffle)."""
-    return _minhash_signatures_from_hashes(word_trigram_shingle_hashes(docs))
-
-
 def _minhash_signatures_from_hashes(hashes: DataFrame) -> DataFrame:
-    """Signature pass over a precomputed (doc_id, h) shingle-hash table —
+    """64-permutation MinHash in a single groupBy pass (64 min-aggregates
+    over one shuffle) over a precomputed (doc_id, h) shingle-hash table —
     lets minhash_lsh_dedup_pairs shingle the corpus ONCE and share the
     result between the signature and verification stages (r6; the r5
     shape tokenized+shingled the corpus twice)."""

@@ -1,6 +1,6 @@
 """One crawl round as a pure DataFrame program (SURVEY §3.2 Spark mirror).
 
-    frontier ─(collapse + politeness rank)→ scheduled     [claim: anti-join]
+    frontier ─(collapse + politeness rank)→ scheduled     [claim: driver claim_merge]
     scheduled ─(blacklist/onion/robots/seen; seed-lineage exempt)→ admitted
     admitted ─(equi-join corpus slim, AQE skew)→ fetched  [status==200]
     fetched  ─(explode out_links → canonicalize UDF → child gates:
@@ -35,10 +35,8 @@ class RoundResult:
     admitted: DataFrame
     new_seen: DataFrame
     pages: DataFrame
-    frontier_next: DataFrame
-    host_state_next: DataFrame
-    # delta-claim decomposition of the two _next tables (driver writes
-    # claim_merge/upsert_keys from these instead of full overwrites):
+    # the round's frontier/host_state deltas (the driver commits them with
+    # claim_merge/upsert_keys):
     discovered_rows: DataFrame  # the round's NEW frontier rows only
     host_delta: DataFrame  # hosts whose last_fetch_round changed
     # n_scheduled / n_admitted / n_pages are DERIVED BY THE DRIVER from
@@ -97,9 +95,6 @@ def run_round(
         )
         .persist()
     )
-
-    # claim (frozen step 3; reference DeleteMany $in, mongojobsstorage.go:165-180)
-    frontier_remainder = frontier.join(scheduled.select("url_hash"), "url_hash", "left_anti")
 
     admitted = admit(
         scheduled,
@@ -254,20 +249,12 @@ def run_round(
         seen_next.select("url_hash"), "url_hash", "left_anti"
     ).persist()
     # THE materializing action: computes scheduled/admitted/fetched caches
-    # transitively (discovered groupBy reads every fetched partition), so
-    # every Observation above is complete when read below
+    # transitively (discovered groupBy reads every fetched partition)
     n_discovered = new_frontier_rows.count()
 
-    frontier_next = frontier_remainder.select(*[f.name for f in frontier.schema.fields]).unionByName(
-        new_frontier_rows.select(*[f.name for f in frontier.schema.fields])
-    )
-
-    # host_state merge: attempted hosts get last_fetch_round = round_no
+    # host_state delta: attempted hosts get last_fetch_round = round_no
     touched = (
         admitted.select("host", "host_hash").distinct().withColumn("last_fetch_round", F.lit(round_no))
-    )
-    host_state_next = host_state.join(touched.select("host"), "host", "left_anti").unionByName(
-        touched
     )
 
     persisted.extend([scheduled, admitted, fetched, new_frontier_rows])
@@ -277,8 +264,6 @@ def run_round(
         admitted=admitted,
         new_seen=new_seen,
         pages=pages,
-        frontier_next=frontier_next,
-        host_state_next=host_state_next,
         discovered_rows=new_frontier_rows.select(*[f.name for f in frontier.schema.fields]),
         host_delta=touched,
         n_pages=n_pages_override,

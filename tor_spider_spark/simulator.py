@@ -73,10 +73,23 @@ class SimResult:
     schedule: list[list[str]] = field(default_factory=list)
     # golden_pages rows (url, round, image_id, caption, phash, status)
     pages: list[dict] = field(default_factory=list)
+    # final frontier rows (url, depth, priority, discovered_round, is_seed)
+    frontier: list[dict] = field(default_factory=list)
+    # final host -> last_fetch_round (the host_state table)
+    host_state: dict[str, int] = field(default_factory=dict)
     rounds_run: int = 0
 
     def seen_hashes(self) -> dict[int, int]:
         return {url_hash(u): r for u, r in self.seen.items()}
+
+    def frontier_rows(self) -> list[tuple]:
+        """Sorted (url, url_hash, depth, priority, discovered_round, is_seed)
+        multiset of the final frontier — the engine table's projection."""
+        return sorted(
+            (r["url"], url_hash(r["url"]), r["depth"], r["priority"],
+             r["discovered_round"], r["is_seed"])
+            for r in self.frontier
+        )
 
 
 def simulate(fixture: Fixture, cfg: CrawlConfig | None = None) -> SimResult:
@@ -273,4 +286,8 @@ def simulate(fixture: Fixture, cfg: CrawlConfig | None = None) -> SimResult:
                     }
                 )
 
+    # politeness annotates copies (step 1 collapses into fresh dicts), so
+    # the frontier rows still hold only their five columns
+    res.frontier = frontier
+    res.host_state = last_fetch_round
     return res

@@ -290,7 +290,8 @@ class SnapshotTable:
         """New version referencing only the new commit (atomic snapshot
         swap). Since r4 the claim step uses :meth:`claim_merge` (the
         delta-cost DeleteMany analog, SURVEY §2.1 S6); overwrite remains
-        for compaction, the legacy claim path, and whole-table refreshes."""
+        for compaction, the bloom shards, and the delta claim's saturated-
+        pruning fallback."""
         commit = self._write_commit(df.select([f.name for f in self.schema.fields]), n_buckets)
         v = self.latest_version() + 1
         self._write_manifest(v, [commit])
@@ -500,7 +501,7 @@ class SnapshotTable:
             # every file through the delta path costs overwrite + footer
             # reads + an extra commit + carried-path bookkeeping. Take the
             # single-commit overwrite instead — version_new_bytes of the
-            # transition ≈ the legacy overwrite, not overwrite-plus.
+            # transition ≈ a plain overwrite, not overwrite-plus.
             all_files = touched + untouched_files
             merged = (
                 spark.read.schema(self.schema)
